@@ -49,21 +49,23 @@ def hash64(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def hash64_expr(expr: str) -> str:
+    """Spark SQL text of ``hash64`` over the SQL expression ``expr``."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def hash64_sql(expr: str) -> str:
     """DuckDB SQL rendering of ``hash64`` for oracle queries."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
-def affine_hash(hash_col: Column, a: int, b: int) -> Column:
+def affine_hash_sql(hash_expr: str, a: int, b: int) -> str:
     """(a * (h mod p) + b) mod p — one MinHash permutation, overflow-safe.
 
-    h is < 2^60; reduce mod p first so a*(h%p) <= ~2^62 < 2^63.
+    h is < 2^60; reduce mod p first so a*(h%p) <= ~2^62 < 2^63. The text
+    is both DuckDB and Spark SQL: the Spark side parses it with ``F.expr``
+    and the oracle mirrors embed it.
     """
-    return (F.lit(a) * (hash_col % F.lit(MERSENNE_P)) + F.lit(b)) % F.lit(MERSENNE_P)
-
-
-def affine_hash_sql(hash_expr: str, a: int, b: int) -> str:
-    """DuckDB SQL rendering of ``affine_hash``."""
     return f"(({a} * ({hash_expr} % {MERSENNE_P}) + {b}) % {MERSENNE_P})"
 
 

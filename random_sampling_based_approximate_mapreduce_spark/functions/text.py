@@ -6,6 +6,14 @@ Everything here is a pure Column expression — JVM-side, whole-stage
 codegen, no Python in the hot path — and each op has an exact ANSI-SQL
 mirror (the ``*_SQL`` templates) used by the DuckDB oracle.
 
+The per-row expressions on the corpus and dedup hot paths are written as
+Spark SQL text (the ``*_expr`` renderers) and parsed once JVM-side by
+``F.expr``. Building the same tree from Column calls costs one or more
+py4j round trips per node — thousands per query plan, which dominated
+driver time. The parsed trees are the Column trees node for node. String
+literals are rendered for the default parser
+(``spark.sql.parser.escapedStringLiterals=false``).
+
 Reference citations:
 - normalize/url-decode  -> RandomizedWordCount.java:41-53 (P1)
 - digit-line filter     -> RandomizedWordCount.java:43-44 (P2)
@@ -29,6 +37,20 @@ WORD_SPLIT_RE = "[^a-z0-9']+"
 # The reference's literal delimiter set (RandomizedWordCount.java:31),
 # rendered as a character-class regex for the parity-mode tokenizer.
 REFERENCE_DELIMS_RE = r"""[\t\n\r\f\\"<>/%?@~`^”!#$&,.'():*+\[\]{}=;_|\-\s]+"""
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_name(name: str) -> str:
+    """``name`` as a Spark SQL column reference (one backtick-quoted part)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+_WS_SQL = sql_string(r"\s+")
+_NON_WORD_SQL = sql_string(r"[^a-z0-9\s]")
 
 
 def normalize_line(col: Column) -> Column:
@@ -122,12 +144,13 @@ def lang_id(col: Column) -> Column:
     return expr
 
 
-def token_count(col: Column) -> Column:
-    """Whitespace token count (0 for empty/blank strings)."""
-    trimmed = F.trim(col)
-    return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    ).cast("long")
+def token_count(col: str) -> Column:
+    """Whitespace token count (0 for empty/blank strings) of column ``col``."""
+    trimmed = f"trim({sql_name(col)})"
+    return F.expr(
+        f"CAST(CASE WHEN length({trimmed}) = 0 THEN 0 "
+        f"ELSE size(split({trimmed}, {_WS_SQL})) END AS BIGINT)"
+    )
 
 
 def bpe_ish_token_count(col: Column) -> Column:
@@ -183,16 +206,21 @@ def fingerprint(col: Column) -> Column:
     return hash64(norm)
 
 
-def prefix_fingerprint(col: Column, n_chars: int = 120) -> Column:
-    """Fingerprint of the first ``n_chars`` of the NORMALIZED text.
+def prefix_fingerprint(col: str, n_chars: int = 120) -> Column:
+    """Fingerprint of the first ``n_chars`` of the NORMALIZED text of
+    column ``col``.
 
     Catches the re-crawl/appended-boilerplate near-dup family (same page,
     different trailing junk) that the full-text fingerprint misses; the
-    standard prefix-keyed dedup used on web corpora."""
-    from .hashing import hash64
+    standard prefix-keyed dedup used on web corpora. The normalization is
+    :func:`fingerprint`'s."""
+    from .hashing import hash64_expr
 
-    norm = F.trim(F.regexp_replace(F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", ""), r"\s+", " "))
-    return hash64(F.substring(norm, 1, n_chars))
+    norm = (
+        f"trim(regexp_replace(regexp_replace(lower({sql_name(col)}), "
+        f"{_NON_WORD_SQL}, ''), {_WS_SQL}, ' '))"
+    )
+    return F.expr(hash64_expr(f"substring({norm}, 1, {n_chars})"))
 
 
 def char_ngrams(col: Column, n: int) -> Column:
@@ -228,10 +256,31 @@ def shingles_from_tokens(toks: Column, k: int) -> Column:
     )
 
 
+def word_tokens_expr(col_sql: str) -> str:
+    """Spark SQL text of :func:`word_tokens` over the SQL expression ``col_sql``."""
+    return (
+        f"filter(split(lower({col_sql}), {sql_string(WORD_SPLIT_RE)}), "
+        "__t -> length(__t) > 0)"
+    )
+
+
+def shingles_expr(toks_sql: str, k: int) -> str:
+    """Spark SQL text of :func:`shingles_from_tokens`; ``toks_sql`` must
+    be a plain attribute for the reason given there."""
+    n_sh = f"greatest(size({toks_sql}) - {k - 1}, 0)"
+    words = ", ".join(f"element_at({toks_sql}, CAST(__i + {j + 1} AS INT))" for j in range(k))
+    return (
+        f"CASE WHEN {n_sh} <= 0 THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE array_distinct(transform(sequence(0, {n_sh} - 1), "
+        f"__i -> concat_ws(' ', {words}))) END"
+    )
+
+
 def with_word_shingles(df: DataFrame, text_col: str, k: int, out: str = "shingles") -> DataFrame:
-    """Two-step tokenize -> shingle projection (see shingles_from_tokens)."""
-    return df.withColumn("__toks", word_tokens(F.col(text_col))).withColumn(
-        out, shingles_from_tokens(F.col("__toks"), k)
+    """Two-step tokenize -> shingle projection (see shingles_from_tokens),
+    built from SQL text."""
+    return df.withColumn("__toks", F.expr(word_tokens_expr(sql_name(text_col)))).withColumn(
+        out, F.expr(shingles_expr("__toks", k))
     ).drop("__toks")
 
 

@@ -280,7 +280,8 @@ def pack_sequences(
       2. an Arrow ``mapInPandas`` cumulative sum within each partition
          (batches arrive in sorted order; state is one running long);
       3. partition totals -> driver (O(num_partitions) rows, like the
-         IVF training sample) -> prefix offsets rejoined as a literal map.
+         IVF training sample, sorted there rather than by a Spark sort
+         job) -> prefix offsets rejoined as a literal map.
 
     The frame is localCheckpoint'd between (2) and (3) so the totals
     action doesn't recompute the scan.
@@ -306,24 +307,19 @@ def pack_sequences(
 
     cum = ranged.mapInPandas(cumsum, schema=out_schema).localCheckpoint(eager=True)
 
-    totals = (
-        cum.groupBy("_pid").agg(F.max("_cum_incl").alias("_tot")).orderBy("_pid").collect()
+    totals = sorted(
+        (r["_pid"], r["_tot"] or 0)
+        for r in cum.groupBy("_pid").agg(F.max("_cum_incl").alias("_tot")).collect()
     )
-    offsets: dict[int, int] = {}
+    offsets: list[str] = []
     running = 0
-    for row in totals:
-        offsets[row["_pid"]] = running
-        running += row["_tot"] or 0
-    if offsets:
-        off_expr = F.create_map(
-            *[F.lit(x) for pid_tot in offsets.items() for x in pid_tot]
-        )[F.col("_pid")]
-    else:
-        off_expr = F.lit(0)
-
-    before = (off_expr + F.col("_cum_incl") - F.col(tokens_col)).cast("long")
+    for pid, tot in totals:
+        offsets.append(f"{pid}, {running}")
+        running += tot
+    off = f"map({', '.join(offsets)})[_pid]" if offsets else "0"
+    before = f"CAST({off} + _cum_incl - {T.sql_name(tokens_col)} AS BIGINT)"
     return (
-        cum.withColumn("bin_id", F.floor(before / F.lit(budget)).cast("long"))
+        cum.withColumn("bin_id", F.expr(f"CAST(FLOOR({before} / {budget}) AS BIGINT)"))
         .drop("_pid", "_cum_incl")
     )
 
@@ -585,6 +581,15 @@ def md5_bucket(id_col: Column, n_hex: int = 2) -> Column:
     return bucket.cast("int")
 
 
+def md5_bucket_expr(id_expr: str, n_hex: int = 2) -> str:
+    """Spark SQL text of :func:`md5_bucket` over the SQL expression ``id_expr``."""
+    h = f"md5(CAST({id_expr} AS STRING))"
+    bucket = "0"
+    for i in range(n_hex):
+        bucket = f"({bucket} * 16 + (instr('{_HEX}', substring({h}, {i + 1}, 1)) - 1))"
+    return f"CAST({bucket} AS INT)"
+
+
 def md5_bucket_sql(id_expr: str, n_hex: int = 2) -> str:
     """DuckDB mirror of :func:`md5_bucket` (same md5 bytes, same digits)."""
     h = f"md5(CAST({id_expr} AS VARCHAR))"
@@ -611,13 +616,12 @@ def hash_split(
     n_val = round(val_frac * 256)
     n_test = round(test_frac * 256)
     train_hi = 256 - n_val - n_test
-    b = md5_bucket(F.col(id_col))
+    b = md5_bucket_expr(T.sql_name(id_col))
     split = (
-        F.when(b < train_hi, F.lit("train"))
-        .when(b < train_hi + n_val, F.lit("val"))
-        .otherwise(F.lit("test"))
+        f"CASE WHEN {b} < {train_hi} THEN 'train' "
+        f"WHEN {b} < {train_hi + n_val} THEN 'val' ELSE 'test' END"
     )
-    return df.withColumn("bucket", b).withColumn("split", split)
+    return df.withColumn("bucket", F.expr(b)).withColumn("split", F.expr(split))
 
 
 def dedup_incremental(
@@ -736,6 +740,7 @@ def keep_best_by_fingerprint(
     id_col: str = "doc_id",
     quality_col: Column | None = None,
     fingerprint_col: Column | None = None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Fingerprint-group dedup keeping the best member, not the first.
 
@@ -747,6 +752,10 @@ def keep_best_by_fingerprint(
     fingerprint; max_by is a single partial-merge aggregate, never a
     window.
 
+    Returns ``(fp, kept_doc, kept_quality, n_members, *carry)``: each
+    ``carry`` column holds the kept member's value, so a caller needs no
+    join back to the input to recover the kept rows' attributes.
+
     Contract (enforced at runtime): ``quality_col`` must be NONNEGATIVE
     and < 1e10, and ``id_col`` a nonnegative integer — the fixed-width
     string rank below mis-orders outside that range ('-' sorts below
@@ -755,18 +764,16 @@ def keep_best_by_fingerprint(
     lexicographically). Any out-of-range quality raises at execution
     time instead of silently keeping the WORST member (ADVICE r8).
     Every quality function in this package satisfies the contract.
+
+    Contract (not checked): ``id_col`` is UNIQUE. The rank ends in the
+    id, so with unique ids no two rows tie and ``kept_doc`` and every
+    ``carry`` value come from the same row. Two rows sharing an id and
+    a quality would tie, and each ``max_by`` could then pick a different
+    one of them. ``documents.doc_id`` is unique (tests pin it).
     """
-    q = quality_col if quality_col is not None else T.token_count(F.col(text_col))
-    fp = (
-        fingerprint_col
-        if fingerprint_col is not None
-        else T.prefix_fingerprint(F.col(text_col))
-    )
-    enriched = docs.select(
-        F.col(id_col),
-        fp.alias("fp"),
-        q.alias("_quality"),
-    )
+    q = quality_col if quality_col is not None else T.token_count(text_col)
+    fp = fingerprint_col if fingerprint_col is not None else T.prefix_fingerprint(text_col)
+    enriched = docs.select(F.col(id_col), fp.alias("fp"), q.alias("_quality"), *carry)
     # Fixed-width STRING rank (quality first, lowest id on ties) instead
     # of a struct key: max_by over a struct has no DuckDB arg_max
     # mirror, and a SCALAR numeric pack (quality * 2^32 - id, the
@@ -783,31 +790,26 @@ def keep_best_by_fingerprint(
     # the >= 0 guard but printf renders a leading '-', which would sort
     # below every '0…' string and lose a tie it should win (review r9).
     # DuckDB mirrors need no change: integer quality cannot be -0.0.
-    qd = (F.col("_quality").cast("double") + F.lit(0.0))
-    rank_raw = F.concat(
-        F.format_string("%020.9f", qd),
-        F.format_string(
-            "%019d", F.lit(9223372036854775807) - F.col(id_col)
-        ),
-    )
-    # runtime contract guard (see docstring): per-row lazy, so the
+    # The runtime contract guard (see docstring) is per-row lazy, so the
     # raise_error branch costs nothing on valid data and the DuckDB
-    # mirrors (which never see invalid data) stay bit-for-bit.
-    rank = F.when(
-        (qd >= F.lit(0.0)) & (qd < F.lit(1.0e10)), rank_raw
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "keep_best_by_fingerprint: quality_col must be in "
-                    "[0, 1e10) for the fixed-width string rank; got "
-                ),
-                F.coalesce(qd.cast("string"), F.lit("NULL")),
-            )
-        )
+    # mirrors (which never see invalid data) stay bit-for-bit. The rank
+    # is SQL text parsed JVM-side (see functions/text), computed once per
+    # row in its own projection and shared by every max_by.
+    qd = "(CAST(_quality AS DOUBLE) + 0.0D)"
+    i = T.sql_name(id_col)
+    msg = T.sql_string(
+        "keep_best_by_fingerprint: quality_col must be in [0, 1e10) "
+        "for the fixed-width string rank; got "
     )
-    return enriched.groupBy("fp").agg(
-        F.max_by(F.col(id_col), rank).alias("kept_doc"),
-        F.max("_quality").alias("kept_quality"),
-        F.count(F.lit(1)).alias("n_members"),
+    rank = (
+        f"CASE WHEN ({qd} >= 0.0D) AND ({qd} < 1.0E10D) "
+        f"THEN concat(format_string('%020.9f', {qd}), "
+        f"format_string('%019d', 9223372036854775807L - {i})) "
+        f"ELSE raise_error(concat({msg}, coalesce(CAST({qd} AS STRING), 'NULL'))) END"
+    )
+    return enriched.withColumn("__rank", F.expr(rank)).groupBy("fp").agg(
+        F.expr(f"max_by({i}, __rank) AS kept_doc"),
+        F.expr("max(_quality) AS kept_quality"),
+        F.expr("count(1) AS n_members"),
+        *[F.expr(f"max_by({T.sql_name(c)}, __rank) AS {T.sql_name(c)}") for c in carry],
     )

@@ -34,9 +34,9 @@ from ..functions import text as T
 from ..functions.rounding import np_sql_round, sql_round
 from ..functions.hashing import (
     MERSENNE_P,
-    affine_hash,
     affine_hash_sql,
     hash64,
+    hash64_expr,
     hash64_sql,
     minhash_coefficients,
 )
@@ -69,7 +69,9 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
     aggregation. Catalyst cannot CSE a hash subtree referenced from many
     lambda expressions (measured 70x slower as a nested higher-order
     expression), while the explode+groupBy form hashes once per shingle
-    and partial-aggregates map-side — one small shuffle on id.
+    and partial-aggregates map-side — one small shuffle on id. The hash,
+    the NUM_HASHES affine mins and the signature array are SQL text parsed
+    JVM-side (the simhash discipline below).
     """
     coeffs = minhash_coefficients(NUM_HASHES)
     from ..sources.tables import ensure_parallelism
@@ -86,27 +88,30 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
     ex = sh.select(F.col(id_col), F.explode_outer("shingles").alias("s")).where(
         F.col("s").isNotNull()
     )
-    h = hash64(F.col("s")) % F.lit(MERSENNE_P)
-    hashed = ex.select(F.col(id_col), h.alias("h"))
+    hashed = ex.select(F.col(id_col), F.expr(f"{hash64_expr('s')} % {MERSENNE_P} AS h"))
     mins = hashed.groupBy(id_col).agg(
         *[
-            F.min(affine_hash(F.col("h"), a, b)).alias(f"s{j}")
+            F.expr(f"min({affine_hash_sql('h', a, b)}) AS s{j}")
             for j, (a, b) in enumerate(coeffs)
         ]
     )
-    return mins.select(
-        F.col(id_col), F.array(*[F.col(f"s{j}") for j in range(NUM_HASHES)]).alias("sig")
-    )
+    sig = ", ".join(f"s{j}" for j in range(NUM_HASHES))
+    return mins.select(F.col(id_col), F.expr(f"array({sig}) AS sig"))
 
 
 def lsh_band_keys(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Explode signatures into (id, band, key) — the LSH bucketing relation."""
-    bands = []
-    for b in range(NUM_BANDS):
-        parts = [F.element_at(F.col("sig"), b * ROWS_PER_BAND + r + 1) for r in range(ROWS_PER_BAND)]
-        bands.append(F.struct(F.lit(b).alias("band"), F.concat_ws(",", *[p.cast("string") for p in parts]).alias("key")))
-    return sigs.select(F.col(id_col), F.explode(F.array(*bands)).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    bands = ", ".join(
+        f"struct({b} AS band, concat_ws(',', "
+        + ", ".join(
+            f"CAST(element_at(sig, {b * ROWS_PER_BAND + r + 1}) AS STRING)"
+            for r in range(ROWS_PER_BAND)
+        )
+        + ") AS key)"
+        for b in range(NUM_BANDS)
+    )
+    return sigs.select(F.col(id_col), F.expr(f"explode(array({bands})) AS bk")).selectExpr(
+        T.sql_name(id_col), "bk.band AS band", "bk.key AS key"
     )
 
 
@@ -134,14 +139,10 @@ def minhash_lsh_candidates(
         bands = bands.persist()
     a = bands.alias("a")
     b = bands.alias("b")
+    i = T.sql_name(id_col)
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        a.join(b, F.expr(f"a.band = b.band AND a.key = b.key AND a.{i} < b.{i}"))
+        .selectExpr(f"a.{i} AS doc_a", f"b.{i} AS doc_b")
         .distinct()
     )
 
@@ -526,24 +527,29 @@ def blocked_dup_clusters(
     )
     # normalize to the canonical (doc_id, text) names at the boundary:
     # ngram_jaccard_verify (and the pair columns downstream) are written
-    # against them, so custom text_col/id_col inputs work uniformly
-    # LAZY localCheckpoint, not eager (round 16) and not persist()
-    # (ADVICE r16): reps and cand are each consumed twice inside the
+    # against them, so custom text_col/id_col inputs work uniformly.
+    # Reuse barriers: reps and cand are each consumed twice inside the
     # verify DAG (reps: minhash side + shingle side; cand: the broadcast
-    # cand_docs side + the pair list), so they need a reuse barrier —
-    # but the EAGER checkpoints serialized the pipeline into three extra
-    # materialization jobs before connected_components' probe collect
-    # ran a fourth. Lazy makes the probe collect the ONE job that
-    # computes the whole chain, storing the blocks on first touch
-    # (measured sf0.1: plan-build 2.26 s -> ~1.2 s, query total
-    # 3.3 s -> ~2.2 s). localCheckpoint rather than persist() because
-    # persist entries are held by the SQL CacheManager until an explicit
-    # unpersist (a long-lived driver would leak three entries per
-    # distinct input) AND are deduped by canonicalized plan, so a repeat
-    # call over the same input path would silently reuse stale cached
-    # data if the underlying files changed; checkpoint blocks instead
-    # die with the DataFrame refs (ContextCleaner) and are never shared
-    # across calls — the lifecycle the eager checkpoints always had.
+    # cand_docs side + the pair list), so each sits behind a
+    # localCheckpoint(eager=False); verified gets one below.
+    # - eager=False defers only the LAST stage. Under AQE the call
+    #   executes the adaptive plan to obtain its RDD, and that runs every
+    #   upstream query stage (shuffle map and broadcast stages) here, at
+    #   the call; the final stage's rows are computed and stored on the
+    #   first action (connected_components' probe collect). Eager
+    #   checkpoints ran one more job per barrier on top of that (round 16,
+    #   sf0.1: plan build 2.26 s -> ~1.2 s, query 3.3 s -> ~2.2 s).
+    # - not persist(): CacheManager entries live until an explicit
+    #   unpersist (a long-lived driver would leak three per distinct
+    #   input) and are shared by canonicalized plan, so a repeat call over
+    #   rewritten files would silently reuse stale rows. Checkpoint blocks
+    #   die with the DataFrame refs (ContextCleaner) and are never shared
+    #   across calls.
+    # - executor loss: the blocks live only in executor block managers
+    #   and the lineage above them is cut, so a partition whose executor
+    #   died after writing it cannot be recomputed; the next job reading
+    #   it fails ("Checkpoint block ... not found") and the query must be
+    #   rerun. It fails loudly, never with a wrong answer.
     reps = (
         with_fp.join(groups.select("__fp", "__rep"), "__fp")
         .where(F.col(id_col) == F.col("__rep"))
@@ -551,7 +557,7 @@ def blocked_dup_clusters(
         .localCheckpoint(eager=False)
     )
     cand = minhash_lsh_candidates(reps).localCheckpoint(eager=False)
-    # verified gets the lazy barrier too: the driver-union-find path
+    # verified gets the same barrier: the driver-union-find path
     # consumes it once (the probe collect), but the distributed CC
     # fallback would otherwise recompute the whole LSH+verify chain when
     # it builds its edge list after the probe.

@@ -483,7 +483,7 @@ def q_doc_quality(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        T.token_count(F.col("text")).alias("n_tokens"),
+        T.token_count("text").alias("n_tokens"),
         sql_round(T.punct_ratio(F.col("text")), 6).alias("punct_ratio"),
     )
 
@@ -502,7 +502,7 @@ def q_doc_quality(spark, sf_dir):
 def q_token_stats(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     return docs.agg(
-        F.sum(T.token_count(F.col("text"))).alias("total_ws_tokens"),
+        F.sum(T.token_count("text")).alias("total_ws_tokens"),
         F.sum(T.bpe_ish_token_count(F.col("text"))).alias("total_bpe_tokens"),
         F.sum(F.length("text")).cast("long").alias("total_chars"),
     )
@@ -556,7 +556,7 @@ def q_training_pipeline(spark, sf_dir):
     enriched = docs.select(
         "doc_id",
         T.lang_id(F.col("text")).alias("lang"),
-        T.token_count(F.col("text")).alias("n_tokens"),
+        T.token_count("text").alias("n_tokens"),
         T.fingerprint(F.col("text")).alias("fp"),
     )
     kept = enriched.where((F.col("lang") == "en") & (F.col("n_tokens") >= 20))

@@ -472,7 +472,7 @@ def q_weighted_sampled_tokens(spark, sf_dir):
         ),
         (
             F.floor(
-                (T.token_count(F.col("text")).cast("double") / F.col("__pi"))
+                (T.token_count("text").cast("double") / F.col("__pi"))
                 * F.lit(10000.0)
             )
             / F.lit(10000.0)

@@ -251,7 +251,7 @@ def q_sequence_packing(spark, sf_dir):
     from ..operators import corpus as C
 
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", T.token_count(F.col("text")).alias("n_tokens")
+        "doc_id", T.token_count("text").alias("n_tokens")
     )
     packed = C.pack_sequences(docs, budget=2048, order_col="doc_id", tokens_col="n_tokens")
     return packed.groupBy("bin_id").agg(
@@ -631,27 +631,20 @@ def q_corpus_pipeline_full(spark, sf_dir):
         .where(F.col("doc_id") % 37 != 0)
         .drop("bucket", "split")
     )
-    # clean is referenced twice (keep_best input + the semi-join left
-    # side). AQE's stage reuse shares the duplicated GRAM subtrees (the
-    # broadcast contamination stages — which is why checkpointing the
-    # contaminated-id list alone measured no faster in r16), but the
-    # plan's two copies of the SPINE (documents scan -> train filter ->
-    # anti join) have no exchange boundary to reuse, so the corpus was
-    # scanned and anti-joined twice. A lazy localCheckpoint merges the
-    # spines: one scan+anti, second consumer reads stored blocks
-    # (round 17 A/B: 2.98 -> 2.51 s min-of-6 alternated, action jobs
-    # 13 -> 12). At cluster scale this materializes the cleaned corpus
-    # once — the boundary real corpus pipelines persist anyway — and
-    # the blocks free via ContextCleaner when the query's refs die.
+    # keep_best carries each kept doc's lang, n_chars and token count
+    # (kept_quality) through its max_by rank, so clean has ONE consumer:
+    # no join back to recover the kept rows, so no reuse barrier is
+    # needed (a localCheckpoint, even a lazy one, runs every upstream
+    # query stage at plan build under AQE). The carry relies on doc_id
+    # being unique (keep_best_by_fingerprint's docstring).
     cont = C.ngram_contamination(train, eval_docs, k=3).select("doc_id")
-    clean = train.join(cont, "doc_id", "left_anti").localCheckpoint(eager=False)
-    kept = C.keep_best_by_fingerprint(clean).select(
-        F.col("kept_doc").alias("doc_id")
+    clean = train.join(cont, "doc_id", "left_anti")
+    kept = C.keep_best_by_fingerprint(clean, carry=("lang", "n_chars")).select(
+        F.col("kept_doc").alias("doc_id"), "lang", "n_chars", "kept_quality"
     )
-    clean_kept = clean.join(kept, "doc_id", "left_semi")
-    capped = C.cap_per_group(clean_kept, "lang", k=40)
+    capped = C.cap_per_group(kept, "lang", k=40)
     return capped.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(T.token_count(F.col("text"))).alias("total_tokens"),
+        F.sum("kept_quality").alias("total_tokens"),
         F.sum("n_chars").alias("total_chars"),
     )

@@ -433,7 +433,9 @@ def q_tfidf_top_terms(spark, sf_dir):
     # count aggregates map-side over already-distinct-per-doc words and
     # ONE exchange (word) remains; the exchange also no longer carries
     # doc_id. Same df values by construction: distinct-per-doc explode
-    # emits each (doc, word) once.
+    # emits each (doc, word) once. Data contract: this counts ROWS, so it
+    # equals the oracle's count of distinct doc_ids only while
+    # documents.doc_id is unique (pinned by tests/test_corpus.py).
     df_tbl = (
         docs.select(
             F.explode_outer(F.array_distinct(T.words(F.col("text")))).alias("word")

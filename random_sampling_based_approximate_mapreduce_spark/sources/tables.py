@@ -23,6 +23,65 @@ TABLES = (
 )
 
 
+# Read confs that change the schema Spark infers from parquet footers.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+# path -> (key, inferred schema); an entry whose key no longer matches is
+# overwritten. Shared by every session in the process: an entry is only
+# used when its file listing and confs match, and two threads racing on
+# one path both store a schema inferred for their own key.
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every file under a local
+    ``path``; None when it is a URL or lists no file."""
+    import os
+
+    if "://" in path:
+        return None
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    except OSError:  # a file vanished mid-listing: read without the memo
+        return None
+    return tuple(sorted(out)) or None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized.
+
+    Inference runs one Spark job per read (footer scan), which made every
+    ``load`` an eager job at plan build. The memo is keyed on the file
+    listing (names, sizes, mtimes) and on the read confs that shape the
+    inferred schema, so rewriting a table or changing such a conf infers
+    again. Non-local paths are not memoized."""
+    stamp = _file_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    key = (stamp, tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -33,7 +92,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from ..session import configure_existing
 
     configure_existing(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) (reads as long
         # under nanosAsLong) and as TIMESTAMP(MICROS, isAdjustedToUTC=false)

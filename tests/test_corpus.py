@@ -549,3 +549,26 @@ class TestKeepBestQualityContract:
         out = keep_best_by_fingerprint(docs, quality_col=F.col("q")).collect()
         assert len(out) == 1
         assert out[0]["kept_doc"] == 1
+
+
+class TestDocIdContract:
+    def test_documents_doc_id_unique_in_fixtures(self, sf_dir):
+        """keep_best_by_fingerprint's carry columns and tfidf_top_terms'
+        per-row document frequency both assume documents.doc_id is
+        unique; pin that on every fixture scale present."""
+        import os
+
+        import duckdb
+
+        root = os.path.dirname(sf_dir)
+        paths = [
+            os.path.join(root, d, "documents.parquet")
+            for d in sorted(os.listdir(root))
+            if os.path.exists(os.path.join(root, d, "documents.parquet"))
+        ]
+        assert paths
+        for p in paths:
+            n, distinct = duckdb.sql(
+                f"SELECT count(*), count(DISTINCT doc_id) FROM read_parquet('{p}')"
+            ).fetchone()
+            assert n == distinct, f"{p}: {n - distinct} duplicate doc_id rows"

@@ -62,7 +62,7 @@ def run_pipeline(docs):
     capped = C.cap_per_group(clean_kept, "lang", k=40)
     return capped.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(T.token_count(F.col("text"))).alias("total_tokens"),
+        F.sum(T.token_count("text")).alias("total_tokens"),
     )
 
 

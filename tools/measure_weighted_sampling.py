@@ -47,7 +47,7 @@ def main() -> None:
         .select(
             "doc_id",
             "n_chars",
-            T.token_count(F.col("text")).alias("tokens"),
+            T.token_count("text").alias("tokens"),
         )
         .localCheckpoint(eager=True)
     )
