@@ -791,9 +791,9 @@ def q_word_count_zstd_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the CONTIGUOUS-RUN pick (run_frames=4, round 13 / VERDICT r12 "
     "item 2): the sampling cluster is a run of 4 adjacent frames, "
     "picked by run key and decoded in one sequential pass per run — "
-    "the BGZF run_blocks knob generalized to the frame rung (the "
-    "seek-table frame list is the same SpanEntry offsets shape as the "
-    "block hop). At ratio 1.0 every run is picked, so the result is "
+    "the shared contiguous-run pick (sources/unit_text) that the BGZF "
+    "run_blocks knob also uses. At ratio 1.0 every run is picked, so "
+    "the result is "
     "the exact file and this query VALUE-ORACLES the run pick + run "
     "decode + seam ownership composition end-to-end against the same "
     "word_count SQL as word_count_zstd_exact — a wrong run boundary, a "
@@ -876,7 +876,7 @@ def _bgzf_text_layout(spark: SparkSession, sf_dir: str) -> str:
     "zcat reads whole). At ratio 1.0 the read is the exact file, so "
     "this is VALUE-ORACLED against the same word_count SQL as the "
     "uncompressed, bzip2 and zstd layouts — proving the shared "
-    "seam_text ownership algebra through a third codec (round 11). "
+    "unit_text line-ownership rule through a third codec (round 11). "
     "Like word_count_zstd_exact, this is a CORRECTNESS prover, not a "
     "performance path: the JVM reads multi-member .gz natively and "
     "faster; the source's wins live at small ratios (docs/SCALE.md). "

@@ -28,20 +28,22 @@ Format facts used (all from the public SAM spec §4.1):
   bytes (deflate's worst-case expansion then still fits);
 - EOF is marked by the spec's fixed 28-byte empty block.
 
+This module is the BGZF codec of the shared sampled-text source
+(``unit_text``): it supplies the file listing, the index (the header
+hop, or a ``.gzi`` sidecar) and the decode of one block. The pick, the
+batching, the line-ownership rule and the Arrow reader are
+``unit_text``'s.
+
 Sampling semantics: BLOCKS are the clusters. ``pick_blocks``
 hash-picks block indices deterministically (md5 of (seed, file, block
-index) — the shared ``pick_units`` algebra, never-empty per pick) from
-the header hop alone. A picked block becomes one partition that seeks
-straight to its compressed offset and inflates ONLY itself (stdlib
-zlib; CRC32 and ISIZE are VERIFIED by zlib's gzip-wrapper decode, a
-check the zstd rung cannot afford without xxhash). Unpicked blocks are
-never decoded; the hop reads only each block's 18-byte header + 4-byte
-ISIZE, ~0.03% of file bytes at the 64 KiB default block size.
-
-Line-boundary contract: the shared seam algebra (``seam_text`` — one
-definition across byteblock / zstd frames / BGZF blocks) in
-decompressed-offset space; union over all blocks at ratio 1.0 is
-exactly the file for arbitrary splits. Estimators HT-scale by 1/ratio;
+index), never-empty per pick) from the header hop alone. A picked block
+inflates ONLY itself (stdlib zlib; CRC32 and ISIZE are VERIFIED by
+zlib's gzip-wrapper decode, a check the zstd codec cannot afford
+without xxhash). Unpicked blocks are never decoded; the hop reads only
+each block's 18-byte header + 4-byte ISIZE, ~0.03% of file bytes at the
+64 KiB default block size. Lines belong to the block containing their
+first decompressed byte; union over all blocks at ratio 1.0 is exactly
+the file for arbitrary splits. Estimators HT-scale by 1/ratio;
 ``row_config`` composes a within-block Bernoulli stage.
 
 The WRITER here (``write_bgzf`` / ``convert_text_to_bgzf``) produces
@@ -64,10 +66,9 @@ pick). The hop is O(blocks) tiny reads driver-side, cached per worker
 like the zstd seek table — and when an htslib ``.gzi`` SIDECAR INDEX
 sits next to the file (the public format ``bgzip -r`` writes; this
 module's writers emit it with ``index=True``), the scan drops to O(1)
-metadata reads per file (round 13), closing the pick-cost asymmetry
-with the zstd rung: at 100 TB the hop is ~1.6B driver-side seeks on
-object storage, the indexed scan one small GET per file. Reference
-parity: this is the
+metadata reads per file, the zstd seek table's cost model: at 100 TB
+the hop is ~1.6B driver-side seeks on object storage, the indexed scan
+one small GET per file. Reference parity: this is the
 sampled-split-of-compressed-stream semantics the reference gets from
 Hadoop's splittable codecs (RandomizedXMLRecordReader.java:76-106)
 extended to gzip, the one mainstream codec Hadoop itself cannot split.
@@ -75,16 +76,25 @@ extended to gzip, the one mainstream codec Hadoop itself cannot split.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 import zlib
-
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from functools import partial
 
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
-from .seam_text import SpanEntry, unit_lines
+from .unit_text import (
+    DEFAULT_BATCH_BYTES,
+    TABLE_CACHE,
+    IndexedCodec,
+    SpanEntry,
+    UnitTextSource,
+    cached_table,
+    convert_parts,
+    list_files,
+    load_sampled,
+    suggest_run,
+)
 
 # SAM spec §4.1: gzip member, FEXTRA set, BC subfield carrying BSIZE.
 _GZIP_ID1 = 0x1F
@@ -115,7 +125,7 @@ BGZF_EOF = bytes.fromhex(
 # ---------------------------------------------------------------------------
 
 
-_BLOCK_CACHE: dict[tuple, tuple[SpanEntry, ...]] = {}
+_BLOCK_CACHE = TABLE_CACHE  # keyed (path, size, st_mtime_ns, sidecar key)
 
 GZI_SUFFIX = ".gzi"
 
@@ -337,30 +347,23 @@ def scan_blocks(path: str) -> tuple[SpanEntry, ...]:
     re-hopped (the module contract: corruption is refused, not
     absorbed — delete or rebuild the sidecar to fall back).
 
-    Cached per (path, size, mtime_ns) — plus the sidecar's
-    (size, mtime_ns) when present, so an index rebuild invalidates —
-    like the zstd seek table: Spark reuses Python workers across
-    tasks, and every block partition of a file needs the same table
-    (the r10 cache contract: immutable tuple out).
+    Cached by ``unit_text.cached_table`` per (path, size, mtime_ns,
+    sidecar (size, mtime_ns) or None), so an index rebuild
+    invalidates.
     """
-    st = os.stat(path)
     idx_path = path + GZI_SUFFIX
     try:
         ist = os.stat(idx_path)
         idx_key: tuple | None = (ist.st_size, ist.st_mtime_ns)
     except FileNotFoundError:
         idx_key = None
-    cache_key = (path, st.st_size, st.st_mtime_ns, idx_key)
-    hit = _BLOCK_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
-    size = st.st_size
-    if idx_key is not None:
-        entries = _scan_via_index(path, idx_path, size)
-        while len(_BLOCK_CACHE) > 256:
-            _BLOCK_CACHE.pop(next(iter(_BLOCK_CACHE)))
-        _BLOCK_CACHE[cache_key] = entries
-        return entries
+    if idx_key is None:
+        return cached_table(path, partial(_hop_blocks, path), idx_key)
+    return cached_table(path, partial(_scan_via_index, path, idx_path), idx_key)
+
+
+def _hop_blocks(path: str, size: int) -> tuple[SpanEntry, ...]:
+    """Block table by hopping the block headers."""
     parsed: list[SpanEntry] = []
     c_off = 0
     d_off = 0
@@ -385,12 +388,7 @@ def scan_blocks(path: str) -> tuple[SpanEntry, ...]:
             parsed.append(SpanEntry(c_off, block_size, d_off, isize))
             c_off += block_size
             d_off += isize
-    entries = tuple(parsed)
-    while len(_BLOCK_CACHE) > 256:  # bound worker memory across many files
-        # FIFO single-entry eviction, not clear() — the zstd cache rule
-        _BLOCK_CACHE.pop(next(iter(_BLOCK_CACHE)))
-    _BLOCK_CACHE[cache_key] = entries
-    return entries
+    return tuple(parsed)
 
 
 def decode_block(path_or_blob, e: SpanEntry) -> bytes:
@@ -482,41 +480,6 @@ class _BlockTailStream:
         self._buf = b""
         self._d = None
         self._j = len(self._entries)
-
-
-def read_block_lines(path: str, entries, idx: int) -> list[str]:
-    """All lines OWNED by block ``idx`` — the shared ``seam_text``
-    pairing; only block ``idx`` and the blocks its edge lines actually
-    span are inflated."""
-    return read_block_run_lines(path, entries, idx, idx + 1)
-
-
-def read_block_run_lines(path: str, entries, start: int, stop: int) -> list[str]:
-    """All lines OWNED by the CONTIGUOUS block run ``[start, stop)`` —
-    exactly the union of per-block ownership (the pairing depends only
-    on span boundaries, so merging interior boundaries merges
-    ownership; tests pin the equivalence), but each block is inflated
-    ONCE: per-block reads of a contiguous run would fetch every
-    interior boundary line by decoding the following block a second
-    time, doubling the decode work of a ratio-1.0 scan."""
-    run = entries[start:stop]
-    if not run:
-        return []
-    merged = SpanEntry(
-        run[0].c_off,
-        sum(e.c_size for e in run),
-        run[0].d_off,
-        sum(e.d_size for e in run),
-    )
-    # view: the run as one unit, followed by the REAL blocks after it
-    # (only their d_sizes + the tail stream are consulted)
-    tmp = [merged] + list(entries[stop:])
-    return unit_lines(
-        tmp,
-        0,
-        lambda _e: b"".join(decode_block(path, b) for b in run if b.d_size),
-        lambda j: _BlockTailStream(path, entries, stop + (j - 1)),
-    )
 
 
 def write_bgzf(
@@ -649,34 +612,20 @@ def convert_text_to_bgzf(
     index: bool = False
 ) -> list[str]:
     """Convert every plain-text part file under ``src_dir`` to a BGZF
-    .gz under ``dst_dir`` (driver-side, one streaming pass per file) —
-    the layout builder for fixtures and measurements. Writes a
-    ``_SUCCESS`` marker like Spark's own writers (callers wrap this in
-    ``ensure_layout``, whose published-check is that marker).
-    ``index=True`` also writes a ``.gzi`` sidecar per part."""
-    os.makedirs(dst_dir, exist_ok=True)
-    out: list[str] = []
-    for f in sorted(os.listdir(src_dir)):
-        p = os.path.join(src_dir, f)
-        if not os.path.isfile(p) or f.startswith(("_", ".")):
-            continue
-        dst = os.path.join(dst_dir, f + ".gz")
-        with open(p, "rb") as fh:
-            stream_bgzf(fh, dst, block_bytes=block_bytes, index=index)
-        out.append(dst)
-    if not out:
-        raise ValueError(f"no text part files under {src_dir}")
-    with open(os.path.join(dst_dir, "_SUCCESS"), "w"):
-        pass
-    return out
+    .gz under ``dst_dir`` (``unit_text.convert_parts``: one streaming
+    pass per file, then a ``_SUCCESS`` marker) — the layout builder for
+    fixtures and measurements. ``index=True`` also writes a ``.gzi``
+    sidecar per part."""
+    return convert_parts(
+        src_dir, dst_dir, ".gz", partial(stream_bgzf, block_bytes=block_bytes, index=index)
+    )
 
 
 def decompress_file(path: str) -> bytes:
     """Whole-file decode via the block hop (tests compare this against
     the original bytes AND against Python's gzip module, which reads
     the same file as ordinary multi-member gzip)."""
-    entries = scan_blocks(path)
-    return b"".join(decode_block(path, e) for e in entries if e.d_size)
+    return b"".join(decode_block(path, e) for e in scan_blocks(path) if e.d_size)
 
 
 # ---------------------------------------------------------------------------
@@ -685,27 +634,14 @@ def decompress_file(path: str) -> bytes:
 
 
 def _list_bgzf_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # confusing suffix refusal / FileNotFoundError downstream
-        found = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-        if not found and os.path.isfile(path):
-            found = [path]
     # .gzi sidecars are metadata, not data (scan_blocks finds them by
     # suffix next to their block file) — never listed, never refused
-    found = [f for f in found if not f.endswith(GZI_SUFFIX)]
-    if not found:
-        raise ValueError(f"no files under {path}")
-    bad = [f for f in found if not f.endswith((".gz", ".bgz", ".bgzf"))]
-    if bad:
-        raise ValueError(f"bgzf_text expects .gz/.bgz/.bgzf files, got {bad[:3]}")
-    return found
+    return list_files(
+        path,
+        lambda f: f.endswith((".gz", ".bgz", ".bgzf")),
+        "bgzf_text expects .gz/.bgz/.bgzf files, got {bad}",
+        skip=(GZI_SUFFIX,),
+    )
 
 
 def suggest_run_blocks(
@@ -738,16 +674,7 @@ def suggest_run_blocks(
     clamp(total * ratio / 20, 1 MiB, 4 MiB) — twenty expected picks,
     floored where sequential I/O amortizes, capped where quantization
     outweighs further streaming gains."""
-    if not 0.0 < ratio <= 1.0:
-        raise ValueError(f"ratio must be in (0, 1], got {ratio}")
-    if ratio < 0.01:
-        return 1
-    target = target_cluster_bytes
-    if total_bytes is not None:
-        if total_bytes < 1:
-            raise ValueError(f"total bytes must be >= 1, got {total_bytes}")
-        target = max(1 << 20, min(4 << 20, int(total_bytes * ratio / 20.0)))
-    return max(1, round(target / block_bytes))
+    return suggest_run(ratio, block_bytes, target_cluster_bytes, total_bytes)
 
 
 def pick_blocks(
@@ -770,142 +697,35 @@ def pick_blocks(
     ~run_blocks x. Returned picks stay per-BLOCK so batching and the
     reader are unchanged; a run's blocks are adjacent, so the reader's
     contiguity merge already decodes each picked run in one pass."""
-    from ..sampling.deterministic import pick_units
-
-    if run_blocks < 1:
-        raise ValueError(f"run_blocks must be >= 1, got {run_blocks}")
-    by_file = [
-        (f, [i for i, e in enumerate(scan_blocks(f)) if e.d_size])
-        for f in _list_bgzf_files(path)
-    ]
-    if all(not idxs for _, idxs in by_file):
-        # every block empty: keep the never-empty contract on unit 0
-        by_file = [(f, list(range(len(scan_blocks(f))))) for f, _ in by_file]
-    if run_blocks == 1:
-        units = [
-            (f, i, scan_blocks(f)[i].c_size) for f, idxs in by_file for i in idxs
-        ]
-        return pick_units(units, ratio, lambda f, i: f"{seed}:{f}#blk{i}")
-    run_members: dict[tuple[str, int], list[int]] = {}
-    units = []
-    for f, idxs in by_file:
-        entries = scan_blocks(f)
-        for j, s in enumerate(range(0, len(idxs), run_blocks)):
-            blocks = idxs[s : s + run_blocks]
-            run_members[(f, j)] = blocks
-            units.append((f, j, sum(entries[b].c_size for b in blocks)))
-    picked_runs, pw, tw = pick_units(
-        units, ratio, lambda f, j: f"{seed}:{f}#run{run_blocks}:{j}"
-    )
-    return [(f, b) for f, j in picked_runs for b in run_members[(f, j)]], pw, tw
+    return CODEC.pick(path, ratio, seed, run_blocks)
 
 
-# ---------------------------------------------------------------------------
-# Spark source
-# ---------------------------------------------------------------------------
+CODEC = IndexedCodec(
+    name="bgzf_text",
+    files=_list_bgzf_files,
+    table=scan_blocks,
+    decode=decode_block,
+    open_tail=_BlockTailStream,
+    tag="blk",
+    run_tag="run",
+    run_option="run_blocks",
+)
+read_block_run_lines = CODEC.run_lines
+batch_picked_blocks = CODEC.batch
 
 
-DEFAULT_BATCH_BYTES = 4 << 20
+def read_block_lines(path: str, entries, idx: int) -> list[str]:
+    """All lines OWNED by block ``idx``; only block ``idx`` and the blocks
+    its edge lines actually span are inflated."""
+    return read_block_run_lines(path, entries, idx, idx + 1)
 
 
-def batch_picked_blocks(
-    picked: list[tuple[str, int]], batch_bytes: int = DEFAULT_BATCH_BYTES
-) -> list[tuple[str, list[int]]]:
-    """Pack picked (file, block_idx) units into per-task batches of
-    ~``batch_bytes`` compressed bytes, never crossing a file boundary
-    (a task holds one open file). The pick stays per-BLOCK — batching
-    changes scheduling, not sampling semantics; tests pin that the
-    batched read equals the per-block ownership oracle exactly."""
-    if batch_bytes < 1:
-        raise ValueError(f"batch_bytes must be >= 1, got {batch_bytes}")
-    out: list[tuple[str, list[int]]] = []
-    cur_file: str | None = None
-    cur_idxs: list[int] = []
-    cur_bytes = 0
-    for f, i in picked:
-        sz = scan_blocks(f)[i].c_size
-        if cur_file is not None and (f != cur_file or cur_bytes >= batch_bytes):
-            out.append((cur_file, cur_idxs))
-            cur_idxs, cur_bytes = [], 0
-        cur_file = f
-        cur_idxs.append(i)
-        cur_bytes += sz
-    if cur_file is not None:
-        out.append((cur_file, cur_idxs))
-    return out
-
-
-class _BlockBatchPartition(InputPartition):
-    def __init__(self, path: str, idxs: list[int]):
-        self.path = path
-        self.idxs = idxs
-
-
-class BgzfTextDataSource(DataSource):
+class BgzfTextDataSource(UnitTextSource):
     """format name ``bgzf_text``; options: path, ratio, seed,
     batch_bytes, run_blocks. Schema fixed: ``value string`` (one row
     per line), matching ``spark.read.text``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "bgzf_text"
-
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> "BgzfTextReader":
-        return BgzfTextReader(self.options)
-
-
-class BgzfTextReader(DataSourceReader):
-    _BATCH_ROWS = 8192
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("bgzf_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.seed = int(options.get("seed", "42"))
-        self.batch_bytes = int(options.get("batch_bytes", str(DEFAULT_BATCH_BYTES)))
-        self.run_blocks = int(options.get("run_blocks", "1"))
-
-    def partitions(self):
-        picked, _, _ = pick_blocks(
-            self.path, self.ratio, self.seed, run_blocks=self.run_blocks
-        )
-        return [
-            _BlockBatchPartition(f, idxs)
-            for f, idxs in batch_picked_blocks(picked, self.batch_bytes)
-        ]
-
-    def read(self, partition: _BlockBatchPartition):
-        import pyarrow as pa
-
-        entries = scan_blocks(partition.path)
-        # contiguous picked blocks decode once as a run (a per-block
-        # loop would re-inflate every interior successor for its
-        # boundary line — 2x decode at ratio 1.0)
-        runs: list[list[int]] = []
-        for idx in partition.idxs:
-            if runs and idx == runs[-1][1]:
-                runs[-1][1] = idx + 1
-            else:
-                runs.append([idx, idx + 1])
-        buf: list[str] = []
-        for start, stop in runs:
-            buf.extend(read_block_run_lines(partition.path, entries, start, stop))
-            while len(buf) >= self._BATCH_ROWS:
-                chunk, buf = buf[: self._BATCH_ROWS], buf[self._BATCH_ROWS :]
-                yield pa.record_batch(
-                    [pa.array(chunk, pa.string())], names=["value"]
-                )
-        if buf:
-            yield pa.record_batch([pa.array(buf, pa.string())], names=["value"])
-
-
-def register_bgzf_text(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(BgzfTextDataSource)
+    codec = CODEC
 
 
 def read_text_bgzf_sampled(
@@ -936,18 +756,10 @@ def read_text_bgzf_sampled(
     example). Deliberately NOT applied automatically: the run key
     differs from the block key, so a default change would silently
     change which rows a seeded sample returns."""
-    register_bgzf_text(spark)
-    # eager driver-side validation
+    # eager driver-side validation, through the module attribute so a
+    # wrapper installed on ``pick_blocks`` sees the driver pick
     pick_blocks(path, block_ratio, seed, run_blocks=run_blocks)
-    df = (
-        spark.read.format("bgzf_text")
-        .option("path", path)
-        .option("ratio", str(block_ratio))
-        .option("seed", str(seed))
-        .option("batch_bytes", str(batch_bytes))
-        .option("run_blocks", str(run_blocks))
-        .load()
+    return load_sampled(
+        spark, BgzfTextDataSource, path, block_ratio, seed, row_config,
+        batch_bytes=batch_bytes, run_blocks=run_blocks,
     )
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, block_ratio, seed, row_config)

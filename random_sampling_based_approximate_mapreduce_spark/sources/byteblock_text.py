@@ -47,20 +47,31 @@ handle them transparently.
 100 TB shape: one picked block = one task = one contiguous ~``block_bytes``
 read — the natural text split. The pick is a driver-side stat() pass
 (O(files)); at extreme file counts distribute the listing like any
-catalog. Arrow batches carry rows into the JVM columnar-side.
+catalog.
+
+This module is the raw-text codec of the shared sampled-text source
+(``unit_text``): the file listing with its codec refusal and the
+block's line reader live here; the pick, the partitions and the Arrow
+reader are shared. The line reader stays its own because it strips
+exactly one ``\n`` or ``\r\n`` — an unterminated final line keeps a
+trailing ``\r``, where the unit-compressed codecs drop it.
 """
 
 from __future__ import annotations
 
-import glob as _glob
-import os
-
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from functools import partial
 
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
+from .unit_text import (
+    SpanCodec,
+    SpanPartition,
+    UnitTextReader,
+    UnitTextSource,
+    list_files,
+    load_sampled,
+)
 
-_CAP = 1 << 32
 DEFAULT_BLOCK_BYTES = 16 << 20
 
 _COMPRESSED_EXTS = (".gz", ".bz2", ".zst", ".zstd", ".snappy", ".lz4", ".deflate")
@@ -73,29 +84,52 @@ def _accept_block(path: str, idx: int, seed: int, ratio: float) -> bool:
 
 
 def _list_text_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # downstream FileNotFoundError (review r10 ADVICE)
-        found = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-        if not found and os.path.isfile(path):
-            found = [path]
-    if not found:
-        raise ValueError(f"no files under {path}")
-    for f in found:
-        if f.endswith(_COMPRESSED_EXTS):
-            raise ValueError(
-                f"byte-block sampling cannot seek into compressed input {f}; "
-                "use bzip2_block_text (block-level byte skip) for .bz2, or "
-                "read_text_file_sampled (file-level clusters) / "
-                "read_text_sampled (row Bernoulli) for other codecs"
-            )
-    return found
+    return list_files(
+        path,
+        lambda f: not f.endswith(_COMPRESSED_EXTS),
+        "byte-block sampling cannot seek into compressed input {bad[0]}; "
+        "use bzip2_block_text (block-level byte skip) for .bz2, or "
+        "read_text_file_sampled (file-level clusters) / "
+        "read_text_sampled (row Bernoulli) for other codecs",
+    )
+
+
+def _read_block_lines(path: str, start: int, end: int):
+    """Lines owned by raw byte block [start, end), streamed."""
+    with open(path, "rb") as fh:
+        fh.seek(start)
+        if start > 0:
+            # land mid-line: the previous block's reader owns this
+            # line (it reads past its end to finish it) — discard
+            fh.readline()
+        # Hadoop LineRecordReader pairing: since every follower block
+        # discards its first line UNCONDITIONALLY, this block owns
+        # lines starting at any offset <= end (including exactly end);
+        # readline() past end finishes the straddler
+        while fh.tell() <= end:
+            line = fh.readline()
+            if not line:
+                break
+            # Strip exactly one line terminator (\n or \r\n), matching
+            # spark.read.text / Hadoop LineReader. Content that ends in
+            # literal \r (or classic-Mac \r-only line endings, which
+            # readline() does not split on) is out of contract — same
+            # as Hadoop's default LineReader without a custom delimiter.
+            if line.endswith(b"\r\n"):
+                line = line[:-2]
+            elif line.endswith(b"\n"):
+                line = line[:-1]
+            yield line.decode("utf-8", errors="replace")
+
+
+CODEC = SpanCodec(
+    name="byteblock_text",
+    files=_list_text_files,
+    tag="blk",
+    size_option="block_bytes",
+    default_size=DEFAULT_BLOCK_BYTES,
+    read_span=_read_block_lines,
+)
 
 
 def pick_blocks(
@@ -107,92 +141,19 @@ def pick_blocks(
     Never returns an empty pick (hash-min fallback). Block boundaries are
     raw byte offsets — the READER aligns them to line boundaries.
     """
-    from ..sampling.deterministic import pick_byte_clusters
-
-    return pick_byte_clusters(
-        _list_text_files(path),
-        ratio,
-        block_bytes,
-        lambda f, idx: f"{seed}:{f}#blk{idx}",
-    )
+    return CODEC.pick(path, ratio, block_bytes, seed)
 
 
-class _BlockPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
+_BlockPartition = SpanPartition
+ByteBlockTextReader = partial(UnitTextReader, CODEC)
 
 
-class ByteBlockTextDataSource(DataSource):
+class ByteBlockTextDataSource(UnitTextSource):
     """format name ``byteblock_text``; options: path, ratio, block_bytes,
     seed. Schema is fixed: ``value string`` (one row per line), matching
     ``spark.read.text``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "byteblock_text"
-
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> "ByteBlockTextReader":
-        return ByteBlockTextReader(self.options)
-
-
-class ByteBlockTextReader(DataSourceReader):
-    _BATCH_ROWS = 8192
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("byteblock_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.block_bytes = int(options.get("block_bytes", str(DEFAULT_BLOCK_BYTES)))
-        self.seed = int(options.get("seed", "42"))
-
-    def partitions(self):
-        picked, _, _ = pick_blocks(self.path, self.ratio, self.block_bytes, self.seed)
-        return [_BlockPartition(f, s, e) for f, s, e in picked]
-
-    def read(self, partition: _BlockPartition):
-        import pyarrow as pa
-
-        with open(partition.path, "rb") as fh:
-            fh.seek(partition.start)
-            if partition.start > 0:
-                # land mid-line: the previous block's reader owns this
-                # line (it reads past its end to finish it) — discard
-                fh.readline()
-            batch: list[str] = []
-            # Hadoop LineRecordReader pairing: since every follower block
-            # discards its first line UNCONDITIONALLY, this block owns
-            # lines starting at any offset <= end (including exactly end);
-            # readline() past end finishes the straddler
-            while fh.tell() <= partition.end:
-                line = fh.readline()
-                if not line:
-                    break
-                # Strip exactly one line terminator (\n or \r\n), matching
-                # spark.read.text / Hadoop LineReader. Content that ends in
-                # literal \r (or classic-Mac \r-only line endings, which
-                # readline() does not split on) is out of contract — same
-                # as Hadoop's default LineReader without a custom delimiter.
-                if line.endswith(b"\r\n"):
-                    line = line[:-2]
-                elif line.endswith(b"\n"):
-                    line = line[:-1]
-                batch.append(line.decode("utf-8", errors="replace"))
-                if len(batch) >= self._BATCH_ROWS:
-                    yield pa.record_batch([pa.array(batch, pa.string())], names=["value"])
-                    batch = []
-            if batch:
-                yield pa.record_batch([pa.array(batch, pa.string())], names=["value"])
-
-
-def register_byteblock_text(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(ByteBlockTextDataSource)
+    codec = CODEC
 
 
 def read_text_byteblock_sampled(
@@ -210,17 +171,8 @@ def read_text_byteblock_sampled(
     ``row_config`` composes a within-block Bernoulli row stage (two-stage
     design, same algebra as the file-level and row-group samplers).
     """
-    register_byteblock_text(spark)
-    # validate eagerly driver-side (clear errors beat executor stack traces)
-    pick_blocks(path, block_ratio, block_bytes, seed)
-    df = (
-        spark.read.format("byteblock_text")
-        .option("path", path)
-        .option("ratio", str(block_ratio))
-        .option("block_bytes", str(block_bytes))
-        .option("seed", str(seed))
-        .load()
+    pick_blocks(path, block_ratio, block_bytes, seed)  # eager validation
+    return load_sampled(
+        spark, ByteBlockTextDataSource, path, block_ratio, seed, row_config,
+        block_bytes=block_bytes,
     )
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, block_ratio, seed, row_config)

@@ -55,6 +55,10 @@ Honesty notes:
   there. bzip2 is the codec where the reference's semantics can be met
   honestly.
 
+This module is the bzip2 codec of the shared sampled-text source
+(``unit_text``): it keeps the block scan, the block decode and the range
+line reader; the pick, the partitions and the Arrow reader are shared.
+
 100 TB shape: one picked range = one task = one contiguous
 ~``range_bytes`` compressed read + a numpy bit-shift magic scan (8
 shifted copies of the range) + per-block decode (itself a numpy bulk
@@ -69,10 +73,9 @@ from __future__ import annotations
 import bz2
 import os
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
+from .unit_text import SpanCodec, UnitTextSource, list_files, load_sampled
 
 BLOCK_MAGIC = 0x314159265359
 FOOTER_MAGIC = 0x177245385090
@@ -352,30 +355,13 @@ def _decode_block_robust(
 
 
 def _list_bz2_files(path: str) -> list[str]:
-    import glob as _glob
-
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # downstream FileNotFoundError (review r10 ADVICE)
-        found = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-        if not found and os.path.isfile(path):
-            found = [path]
-    if not found:
-        raise ValueError(f"no files under {path}")
-    bad = [f for f in found if not f.endswith(".bz2")]
-    if bad:
-        raise ValueError(
-            f"bzip2_block_text reads .bz2 files only (got {bad[:3]}); raw "
-            "text wants byteblock_text, other codecs want "
-            "read_text_file_sampled / read_text_sampled"
-        )
-    return found
+    return list_files(
+        path,
+        lambda f: f.endswith(".bz2"),
+        "bzip2_block_text reads .bz2 files only (got {bad}); raw "
+        "text wants byteblock_text, other codecs want "
+        "read_text_file_sampled / read_text_sampled",
+    )
 
 
 def suggest_range_bytes(
@@ -434,14 +420,7 @@ def pick_ranges(
     and line boundaries. Returns (picked [(file, start, end)],
     picked_bytes, total_bytes).
     """
-    from ..sampling.deterministic import pick_byte_clusters
-
-    return pick_byte_clusters(
-        _list_bz2_files(path),
-        ratio,
-        range_bytes,
-        lambda f, idx: f"{seed}:{f}#bzr{idx}",
-    )
+    return CODEC.pick(path, ratio, range_bytes, seed)
 
 
 # a reader must know whether its first owned block is the FILE's first
@@ -578,60 +557,23 @@ def read_range_lines(path: str, start: int, end: int) -> list[str]:
         win.close()
 
 
-class _RangePartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
+# a range's lines are materialized before batching: bounded by
+# range_bytes * bzip2's ~10x text ratio
+CODEC = SpanCodec(
+    name="bzip2_block_text",
+    files=_list_bz2_files,
+    tag="bzr",
+    size_option="range_bytes",
+    default_size=DEFAULT_RANGE_BYTES,
+    read_span=read_range_lines,
+)
 
 
-class Bzip2BlockTextDataSource(DataSource):
+class Bzip2BlockTextDataSource(UnitTextSource):
     """format name ``bzip2_block_text``; options: path, ratio,
     range_bytes, seed. Schema ``value string``, one row per line."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "bzip2_block_text"
-
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> "Bzip2BlockTextReader":
-        return Bzip2BlockTextReader(self.options)
-
-
-class Bzip2BlockTextReader(DataSourceReader):
-    _BATCH_ROWS = 8192
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("bzip2_block_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.range_bytes = int(options.get("range_bytes", str(DEFAULT_RANGE_BYTES)))
-        self.seed = int(options.get("seed", "42"))
-
-    def partitions(self):
-        picked, _, _ = pick_ranges(self.path, self.ratio, self.range_bytes, self.seed)
-        return [_RangePartition(f, s, e) for f, s, e in picked]
-
-    def read(self, partition: _RangePartition):
-        import pyarrow as pa
-
-        # one range = a few decompressed blocks (bounded by range_bytes
-        # * bzip2's ~10x text ratio), so materializing before batching
-        # is bounded by the partition size by construction
-        lines = read_range_lines(partition.path, partition.start, partition.end)
-        for i in range(0, len(lines), self._BATCH_ROWS):
-            yield pa.record_batch(
-                [pa.array(lines[i : i + self._BATCH_ROWS], pa.string())],
-                names=["value"],
-            )
-
-
-def register_bzip2_block_text(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(Bzip2BlockTextDataSource)
+    codec = CODEC
 
 
 def read_text_bzip2_sampled(
@@ -649,7 +591,7 @@ def read_text_bzip2_sampled(
     ``row_config`` composes a within-range Bernoulli row stage — the
     same two-stage algebra as the byteblock / file-level samplers.
 
-    ``range_bytes`` is this rung's cluster-size knob:
+    ``range_bytes`` is this codec's cluster-size knob:
     ``suggest_range_bytes(path, range_ratio)`` returns the measured
     guidance (~ total*r/20, floored at one compressed block, capped at
     the 4 MiB default — docs/SCALE.md round-15 addendum has the grid).
@@ -657,16 +599,8 @@ def read_text_bzip2_sampled(
     the pick key, so a default change would silently change which
     lines a seeded sample returns.
     """
-    register_bzip2_block_text(spark)
     pick_ranges(path, range_ratio, range_bytes, seed)  # eager validation
-    df = (
-        spark.read.format("bzip2_block_text")
-        .option("path", path)
-        .option("ratio", str(range_ratio))
-        .option("range_bytes", str(range_bytes))
-        .option("seed", str(seed))
-        .load()
+    return load_sampled(
+        spark, Bzip2BlockTextDataSource, path, range_ratio, seed, row_config,
+        range_bytes=range_bytes,
     )
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, range_ratio, seed, row_config)

@@ -6,6 +6,9 @@ accept/reject decision runs inside the reader loop, before a rejected
 line ever becomes a row — the reference's reader-level Bernoulli
 sampling (RandomizedLineRecordReader.java:56-83) as a first-class source
 (its InputFormat plug-in surface, RandomizedTextInputFormat.java:28-33).
+It is the row-level codec of the shared sampled-text source
+(``unit_text``): one partition per listed file, its lines streamed
+through the per-line accept and batched into Arrow by the shared reader.
 
 When to use WHICH sampler:
 - ``df.sample`` above ``spark.read.text`` (sources/text.py) is the
@@ -13,15 +16,15 @@ When to use WHICH sampler:
   Observation totals. The residual cost of a rejected row is one read
   row, same as the reference (it also reads every line to count it).
 - THIS source exists for parity of the plug-in surface and for inputs
-  where downstream must never see rejected rows at all. Per-partition
-  (seen, kept) counts are reported in logs; totals come via the
-  ``rsmr_seen`` accumulator pattern documented below.
+  where downstream must never see rejected rows at all. It reports
+  only the kept lines: no seen count leaves the reader, so totals are
+  estimated from the kept rows at 1/ratio.
 
-Sampling is hash-deterministic per (line_number, seed) — replay-stable
-under Spark task retries, which the reference's unseeded ``Random``
-(RandomizedLineRecordReader.java:50) is not: a retried task there
-resamples DIFFERENT lines, silently skewing totals. Gzip inputs are
-handled by extension, like the reference's codec factory.
+Sampling is hash-deterministic per (path, line_number, seed) —
+replay-stable under Spark task retries, which the reference's unseeded
+``Random`` (RandomizedLineRecordReader.java:50) is not: a retried task
+there resamples DIFFERENT lines, silently skewing totals. Gzip inputs
+are handled by extension, like the reference's codec factory.
 
 Registration: ``register_sampled_text(spark)`` once per session, then
 ``spark.read.format("sampled_text").option("path", p)
@@ -31,73 +34,42 @@ Schema: ``line STRING`` (add parsing above, per engine discipline).
 
 from __future__ import annotations
 
-import glob as _glob
 import gzip
 import hashlib
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from .unit_text import FilePartition, UnitTextSource, list_files
 
 _BUCKETS = 1_000_000
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+class _SampledLines:
+    """The codec: every listed file is one partition; its lines stream
+    in text mode (never materialized) through the per-line accept."""
 
+    name = "sampled_text"
+    options: dict[str, int] = {}
 
-class SampledTextDataSource(DataSource):
-    """format name: ``sampled_text``; options: path, ratio, seed."""
+    def partitions(self, path, ratio, seed, opts):
+        return [FilePartition(f) for f in list_files(path)]
 
-    @classmethod
-    def name(cls) -> str:
-        return "sampled_text"
-
-    def schema(self) -> str:
-        return "line STRING"
-
-    def reader(self, schema) -> "SampledTextReader":
-        return SampledTextReader(self.options)
-
-
-class SampledTextReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("sampled_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.seed = int(options.get("seed", "42"))
-
-    def partitions(self):
-        # expand directories like the sibling sources (review r8: a bare
-        # glob of a directory path yielded the directory itself as a
-        # "file" partition and IsADirectoryError inside the task)
-        import os as _os
-
-        out = []
-        for p in sorted(_glob.glob(self.path)) or [self.path]:
-            if _os.path.isdir(p):
-                out.extend(
-                    sorted(
-                        _os.path.join(p, f)
-                        for f in _os.listdir(p)
-                        if not f.startswith((".", "_"))
-                        and _os.path.isfile(_os.path.join(p, f))
-                    )
-                )
-            else:
-                out.append(p)
-        return [_FilePartition(f) for f in out]
-
-    def read(self, partition: _FilePartition):
-        ratio, seed = self.ratio, self.seed
+    def lines(self, part, ratio, seed, opts):
         from ..sampling.deterministic import bucket_threshold
 
         threshold = bucket_threshold(ratio, _BUCKETS) if ratio < 1.0 else _BUCKETS
-        opener = gzip.open if partition.path.endswith(".gz") else open
-        with opener(partition.path, "rt", encoding="utf-8", errors="replace") as f:
+        opener = gzip.open if part.path.endswith(".gz") else open
+        with opener(part.path, "rt", encoding="utf-8", errors="replace") as f:
             for i, line in enumerate(f):
-                if ratio >= 1.0 or _accept(partition.path, i, seed, threshold):
-                    yield (line.rstrip("\n"),)
+                if ratio >= 1.0 or _accept(part.path, i, seed, threshold):
+                    yield line.rstrip("\n")
+
+
+class SampledTextDataSource(UnitTextSource):
+    """format name: ``sampled_text``; options: path, ratio, seed."""
+
+    codec = _SampledLines()
+
+    def schema(self) -> str:
+        return "line STRING"
 
 
 def _accept(path: str, lineno: int, seed: int, threshold: int) -> bool:

@@ -26,23 +26,21 @@ Format facts used (all from the public spec):
 - each data frame is a self-contained zstd frame (magic ``0x28B52FFD``)
   decodable in isolation.
 
-Sampling semantics: FRAMES are the clusters. ``pick_frames`` hash-picks
-frame indices deterministically (md5 of (seed, file, frame index) — the
-shared ``pick_byte_clusters``-style algebra, never-empty per pick) from
-the seek table alone, so the pick costs a tail read per file, not a
-scan. A picked frame becomes one partition that seeks straight to its
-compressed offset and decompresses ONLY itself (pyarrow's zstd codec;
-the seek table supplies the exact decompressed size the codec needs).
-Unpicked frames are never opened, never read, never decoded.
+This module is the zstd codec of the shared sampled-text source
+(``unit_text``): it supplies the file listing, the index (the seek
+table, parsed from a tail read) and the decode of one frame (pyarrow's
+zstd codec; the seek table supplies the exact decompressed size). The
+pick, the batching, the line-ownership rule and the Arrow reader are
+``unit_text``'s.
 
-Line-boundary contract: identical to ``byteblock_text`` but in
-DECOMPRESSED offset space — a line belongs to the frame containing its
-first byte; a reader whose frame starts at decompressed offset > 0
-discards the line it lands in (the previous frame's reader finishes it,
-pulling follow-on frames as needed), then emits lines whose start
-offset is <= its frame end. Union over all frames at ratio 1.0 is
-exactly the file (tests prove the seam algebra for arbitrary — not just
-line-aligned — frame splits). Estimators HT-scale by 1/ratio exactly as
+Sampling semantics: FRAMES are the clusters. ``pick_frames`` hash-picks
+frame indices deterministically (md5 of (seed, file, frame index),
+never-empty per pick) from the seek tables alone, so the pick costs a
+tail read per file, not a scan. Unpicked frames are never opened, never
+read, never decoded. Lines belong to the frame containing their first
+decompressed byte (``unit_text``'s ownership rule); union over all
+frames at ratio 1.0 is exactly the file for arbitrary — not just
+line-aligned — frame splits. Estimators HT-scale by 1/ratio exactly as
 for byte blocks; ``row_config`` composes a within-frame Bernoulli stage.
 
 The WRITER here (``write_seekable_zstd`` / ``convert_text_to_seekable``)
@@ -56,20 +54,13 @@ row Bernoulli through Spark's own codec).
 
 100 TB shape: the FRAME is the sampling unit, but the PARTITION is a
 batch of picked frames packed to ``batch_bytes`` (~4 MB compressed)
-per task, never crossing a file (round 13 — the BGZF task-batching
-carried over: the ×16000 grid measured a worker round-trip + boundary
-fetch per one-frame task, and at 100 TB / r=0.1 one task per 4 MB
-frame would be ~2.5M tasks); contiguous picked frames inside a batch
-decode in one sequential pass. The pick is O(files) tail reads
-driver-side.
-``run_frames=K`` (round 13, VERDICT r12 item 2) widens the sampling
-unit to a contiguous run of K adjacent frames — the BGZF rung's
-contiguous-run pick carried over verbatim (the seek-table frame list is
-the same SpanEntry shape as the block hop) — so a picked unit reads
-K frames' compressed bytes in ONE sequential pass. At this rung's 4 MB
-default frame the knob is rarely needed (a singleton is already a ~1 MB
-sequential read); it exists for small-frame layouts and for symmetry
-with ``bgzf_text``, and the ratio-1.0 prover
+per task, never crossing a file; contiguous picked frames inside a
+batch decode in one sequential pass. The pick is O(files) tail reads
+driver-side. ``run_frames=K`` widens the sampling unit to a contiguous
+run of K adjacent frames, so a picked unit reads K frames' compressed
+bytes in ONE sequential pass. At the 4 MB default frame the knob is
+rarely needed (a singleton is already a ~1 MB sequential read); it
+matters for small-frame layouts, and the ratio-1.0 prover
 (``word_count_zstd_runs_exact``) value-oracles the run composition.
 Frame checksums (XXH64 low bits) are parsed but not verified — no
 xxhash in this environment's public deps; corruption still surfaces as
@@ -78,15 +69,24 @@ a zstd decode error.
 
 from __future__ import annotations
 
-import glob as _glob
-import os
 import struct
-
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from functools import partial
 
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
-from .seam_text import SpanEntry, unit_lines
+from .unit_text import (
+    DEFAULT_BATCH_BYTES,
+    TABLE_CACHE,
+    IndexedCodec,
+    SpanEntry,
+    UnitTextReader,
+    UnitTextSource,
+    cached_table,
+    convert_parts,
+    list_files,
+    load_sampled,
+    suggest_run,
+)
 
 SKIPPABLE_MAGIC = 0x184D2A5E
 SEEKABLE_MAGIC = 0x8F92EAB1
@@ -94,8 +94,6 @@ ZSTD_FRAME_MAGIC = 0xFD2FB528  # bytes 28 B5 2F FD read as LE uint32
 _FOOTER_BYTES = 9
 DEFAULT_FRAME_BYTES = 4 << 20
 
-# One data frame: the shared skip-unit descriptor (seam_text.SpanEntry);
-# the frame-specific name is kept for this module's public surface.
 FrameEntry = SpanEntry
 
 
@@ -104,29 +102,20 @@ FrameEntry = SpanEntry
 # ---------------------------------------------------------------------------
 
 
-_TABLE_CACHE: dict[tuple[str, int, int], tuple[FrameEntry, ...]] = {}
+_TABLE_CACHE = TABLE_CACHE  # keyed (path, size, st_mtime_ns)
 
 
 def parse_seek_table(path: str) -> tuple[FrameEntry, ...]:
     """Read the seekable-format table from the file TAIL (no data scan).
 
     Raises ValueError (with the fallback ladder) for files that are not
-    seekable-format zstd — including plain single-frame .zst.
-
-    Cached per (path, size, mtime_ns): Spark reuses Python workers across
-    tasks, and every frame partition of a file needs the same table —
-    without the cache a 100k-frame file would pay an O(frames) tail read
-    per task, O(frames^2) across its tasks. Keyed on st_mtime_ns (not the
-    float st_mtime, whose sub-second truncation can alias a same-size
-    overwrite) and stored/returned as an immutable tuple so no caller can
-    mutate the cached entries (review r10 ADVICE).
+    seekable-format zstd — including plain single-frame .zst. Cached per
+    (path, size, st_mtime_ns) by ``unit_text.cached_table``.
     """
-    st = os.stat(path)
-    cache_key = (path, st.st_size, st.st_mtime_ns)
-    hit = _TABLE_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
-    size = os.path.getsize(path)
+    return cached_table(path, partial(_parse_seek_table, path))
+
+
+def _parse_seek_table(path: str, size: int) -> tuple[FrameEntry, ...]:
     with open(path, "rb") as fh:
         if size < _FOOTER_BYTES + 8:
             raise ValueError(f"{path}: too small to be seekable zstd")
@@ -213,12 +202,6 @@ def parse_seek_table(path: str) -> tuple[FrameEntry, ...]:
                         f"{len(out)} bytes but the seek table claims 0 "
                         "(lying seek-table entry)"
                     )
-    while len(_TABLE_CACHE) > 256:  # bound worker memory across many files
-        # FIFO single-entry eviction, not clear(): a task mix cycling
-        # over >256 files would otherwise wipe every hot entry at once
-        # and re-pay the tail parses the cache exists to amortize
-        _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
-    _TABLE_CACHE[cache_key] = entries
     return entries
 
 
@@ -312,49 +295,20 @@ def convert_text_to_seekable(
     src_dir: str, dst_dir: str, frame_bytes: int = DEFAULT_FRAME_BYTES
 ) -> list[str]:
     """Convert every plain-text part file under ``src_dir`` to a
-    seekable .zst under ``dst_dir`` (driver-side, one pass per file) —
-    the layout builder for fixtures and measurements.
-
-    Writes a ``_SUCCESS`` marker like Spark's own writers: callers wrap
-    this in ``ensure_layout``, whose published-check is that marker —
-    without it every call would rebuild AND destructively replace a
-    layout another session may be reading (review r10)."""
-    os.makedirs(dst_dir, exist_ok=True)
-    out: list[str] = []
-    for f in sorted(os.listdir(src_dir)):
-        p = os.path.join(src_dir, f)
-        if not os.path.isfile(p) or f.startswith(("_", ".")):
-            continue
-        dst = os.path.join(dst_dir, f + ".zst")
-        with open(p, "rb") as fh:
-            # review r10: frame_bytes was silently dropped here, so every
-            # converted file was one 4 MB-default frame and the oracled
-            # layout never crossed a seam; streamed so peak memory is
-            # O(frame_bytes), not O(part size)
-            stream_seekable_zstd(fh, dst, frame_bytes=frame_bytes)
-        out.append(dst)
-    if not out:
-        raise ValueError(f"no text part files under {src_dir}")
-    with open(os.path.join(dst_dir, "_SUCCESS"), "w"):
-        pass
-    return out
+    seekable .zst under ``dst_dir`` (``unit_text.convert_parts``: one
+    streaming pass per file, then a ``_SUCCESS`` marker) — the layout
+    builder for fixtures and measurements."""
+    # frame_bytes must reach the writer: a dropped value makes every file
+    # one 4 MB-default frame, and the oracled layout never crosses a seam
+    return convert_parts(
+        src_dir, dst_dir, ".zst", partial(stream_seekable_zstd, frame_bytes=frame_bytes)
+    )
 
 
 def decompress_file(path: str) -> bytes:
     """Whole-file decode via the seek table (tests compare this against
     the original bytes and against per-frame reads)."""
-    import pyarrow as pa
-
-    codec = pa.Codec("zstd")
-    entries = parse_seek_table(path)
-    out = bytearray()
-    with open(path, "rb") as fh:
-        for e in entries:
-            fh.seek(e.c_off)
-            if e.d_size == 0:
-                continue
-            out += codec.decompress(fh.read(e.c_size), e.d_size, asbytes=True)
-    return bytes(out)
+    return b"".join(_decode_frame(path, e) for e in parse_seek_table(path) if e.d_size)
 
 
 # ---------------------------------------------------------------------------
@@ -363,27 +317,11 @@ def decompress_file(path: str) -> bytes:
 
 
 def _list_zst_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # confusing suffix refusal / FileNotFoundError downstream
-        # (review r10 ADVICE)
-        found = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-        if not found and os.path.isfile(path):
-            found = [path]
-    if not found:
-        raise ValueError(f"no files under {path}")
-    bad = [f for f in found if not f.endswith((".zst", ".zstd"))]
-    if bad:
-        raise ValueError(
-            f"zstd_seekable_text expects .zst/.zstd files, got {bad[:3]}"
-        )
-    return found
+    return list_files(
+        path,
+        lambda f: f.endswith((".zst", ".zstd")),
+        "zstd_seekable_text expects .zst/.zstd files, got {bad}",
+    )
 
 
 def suggest_run_frames(
@@ -392,9 +330,9 @@ def suggest_run_frames(
     target_cluster_bytes: int = 16 << 20,
 ) -> int:
     """Measured guidance for ``run_frames`` — the shared crossover rule
-    (``bgzf_text.suggest_run_blocks``: singletons below r=0.01 where
-    the pick floor dominates, contiguous clusters at moderate ratios)
-    with THIS rung's measured cluster target (~16 MB = runs of 4 at
+    (``unit_text.suggest_run``: singletons below r=0.01 where the pick
+    floor dominates, contiguous clusters at moderate ratios) with this
+    codec's measured cluster target (~16 MB = runs of 4 at
     the default frame). History matters for reading the numbers: the
     round-13 ×16000 grid first measured runs of 4 flipping the losing
     moderate-r cells (r=0.1 warm 0.57x -> 1.04x, cold 1.07x -> 2.68x,
@@ -409,94 +347,44 @@ def suggest_run_frames(
     automatically (the run key differs from the frame key, so a
     default change would silently change which rows a seeded sample
     returns)."""
-    from .bgzf_text import suggest_run_blocks
-
-    return suggest_run_blocks(
-        ratio, block_bytes=frame_bytes, target_cluster_bytes=target_cluster_bytes
-    )
+    return suggest_run(ratio, frame_bytes, target_cluster_bytes)
 
 
 def pick_frames(
     path: str, ratio: float, seed: int = 42, run_frames: int = 1
 ) -> tuple[list[tuple[str, int]], int, int]:
     """Deterministic hash-pick of frames across all files from their seek
-    tables alone. Returns (picked [(file, frame_idx)], picked_compressed
-    bytes, total_compressed_bytes of data frames). Never empty. The
-    accept rule + never-empty fallback is the shared ``pick_units``
-    algebra (one definition across all cluster pickers).
+    tables alone (``unit_text.pick_unit_runs``, keys ``#frm{i}``).
+    Returns (picked [(file, frame_idx)], picked compressed bytes, total
+    compressed bytes of data frames). Never empty. Singleton picks
+    include empty frames.
 
     ``run_frames > 1`` makes the sampling UNIT a contiguous run of that
-    many adjacent data frames (the last run per file may be shorter) —
-    the BGZF rung's contiguous-run pick (``bgzf_text.pick_blocks``,
-    VERDICT r12 item 2) generalized to the frame rung; the seek-table
-    frame list is the same SpanEntry offsets shape as the block hop, so
-    the run algebra carries over verbatim. HT semantics are unchanged —
-    every line's inclusion probability is still ``ratio``, with the run
-    as the cluster — but a picked unit's compressed bytes are sequential
-    on disk. The price is the same coarser pick floor (~run_frames x),
-    and at this rung's 4 MB default frame a SINGLETON pick is already a
-    ~1 MB sequential compressed read, so the knob matters mainly for
-    small-frame layouts (the BGZF crossover analysis in
-    ``bgzf_text.suggest_run_blocks`` applies with frame_bytes in place
-    of block_bytes). ``run_frames=1`` is bit-for-bit the historical
-    per-frame pick (same keys, same picks). Returned picks stay
-    per-FRAME so downstream accounting is unchanged; a run's frames are
-    adjacent, so the reader decodes each picked run in one pass."""
-    from ..sampling.deterministic import pick_units
-
-    if run_frames < 1:
-        raise ValueError(f"run_frames must be >= 1, got {run_frames}")
-    files = _list_zst_files(path)
-    if run_frames == 1:
-        units = [
-            (f, i, e.c_size)
-            for f in files
-            for i, e in enumerate(parse_seek_table(f))
-        ]
-        return pick_units(units, ratio, lambda f, i: f"{seed}:{f}#frm{i}")
-    by_file = [
-        (f, [i for i, e in enumerate(parse_seek_table(f)) if e.d_size])
-        for f in files
-    ]
-    if all(not idxs for _, idxs in by_file):
-        # every frame empty: keep the never-empty contract on unit 0
-        by_file = [
-            (f, list(range(len(parse_seek_table(f))))) for f, _ in by_file
-        ]
-    run_members: dict[tuple[str, int], list[int]] = {}
-    units = []
-    for f, idxs in by_file:
-        entries = parse_seek_table(f)
-        for j, s in enumerate(range(0, len(idxs), run_frames)):
-            frames = idxs[s : s + run_frames]
-            run_members[(f, j)] = frames
-            units.append((f, j, sum(entries[i].c_size for i in frames)))
-    picked_runs, pw, tw = pick_units(
-        units, ratio, lambda f, j: f"{seed}:{f}#frmrun{run_frames}:{j}"
-    )
-    return [(f, i) for f, j in picked_runs for i in run_members[(f, j)]], pw, tw
-
-
-# ---------------------------------------------------------------------------
-# frame reader (byteblock seam algebra in decompressed-offset space)
-# ---------------------------------------------------------------------------
+    many adjacent non-empty frames (keys ``#frmrun{K}:{j}``; the last
+    run per file may be shorter). HT semantics are unchanged — every
+    line's inclusion probability is still ``ratio``, with the run as the
+    cluster — but a picked unit's compressed bytes are sequential on
+    disk. The price is a coarser pick floor (~run_frames x), and at the
+    4 MB default frame a SINGLETON pick is already a ~1 MB sequential
+    compressed read, so the knob matters mainly for small-frame layouts.
+    Returned picks stay per-FRAME; a run's frames are adjacent, so the
+    reader decodes each picked run in one pass."""
+    return CODEC.pick(path, ratio, seed, run_frames)
 
 
 class _FrameTailStream:
     """Readable stream over the decompressed bytes of frames ``j..`` —
-    the seam algebra's boundary-line fetch, STREAMING (review r10: the
-    aligned-layout common case needs only the successor frame's first
-    line, and a one-shot ``Codec.decompress`` of that whole frame
-    doubled every partition's decode work). ``CompressedInputStream``
-    over the concatenated frames (libzstd streaming — it also skips the
-    trailing seek-table skippable frame) decodes ~one 64 KB chunk
-    instead; closing also closes the underlying file handle."""
+    the boundary-line fetch of ``unit_text.read_run_lines``, streaming:
+    ``CompressedInputStream`` over the concatenated frames (libzstd
+    streaming — it also skips the trailing seek-table skippable frame)
+    decodes ~one 64 KB chunk instead of the whole successor frame;
+    closing also closes the underlying file handle."""
 
-    def __init__(self, path: str, c_off: int):
+    def __init__(self, path: str, entries, j: int):
         import pyarrow as pa
 
         self._raw = pa.OSFile(path, "rb")
-        self._raw.seek(c_off)
+        self._raw.seek(entries[j].c_off)
         self._stream = pa.CompressedInputStream(self._raw, "zstd")
 
     def read(self, n: int) -> bytes:
@@ -518,152 +406,34 @@ def _decode_frame(path: str, e: FrameEntry) -> bytes:
         return pa.Codec("zstd").decompress(fh.read(e.c_size), e.d_size, asbytes=True)
 
 
+CODEC = IndexedCodec(
+    name="zstd_seekable_text",
+    files=_list_zst_files,
+    table=parse_seek_table,
+    decode=_decode_frame,
+    open_tail=_FrameTailStream,
+    tag="frm",
+    run_tag="frmrun",
+    run_option="run_frames",
+    keep_empty=True,
+)
+read_frame_run_lines = CODEC.run_lines
+batch_picked_frames = CODEC.batch
+ZstdSeekableTextReader = partial(UnitTextReader, CODEC)
+
+
 def read_frame_lines(path: str, entries: list[FrameEntry], idx: int) -> list[str]:
-    """All lines OWNED by frame ``idx`` — the shared ``seam_text``
-    pairing (one C-level split over the frame body; review r10: an
-    O(n^2) readline re-slice made a 4 MB frame cost ~100x its decode).
-    Only frame ``idx`` and the frames its edge lines actually span are
-    decompressed."""
+    """All lines OWNED by frame ``idx``; only frame ``idx`` and the frames
+    its edge lines actually span are decompressed."""
     return read_frame_run_lines(path, entries, idx, idx + 1)
 
 
-def read_frame_run_lines(
-    path: str, entries: list[FrameEntry], start: int, stop: int
-) -> list[str]:
-    """All lines OWNED by the CONTIGUOUS frame run ``[start, stop)`` —
-    exactly the union of per-frame ownership (the pairing depends only
-    on span boundaries, so merging interior boundaries merges
-    ownership; tests pin the equivalence), but each frame is decoded
-    ONCE: per-frame reads of a contiguous run would fetch every
-    interior boundary line by decoding into the following frame a
-    second time — the same double-decode the BGZF run reader avoids
-    (``bgzf_text.read_block_run_lines``)."""
-    run = entries[start:stop]
-    if not run:
-        return []
-    merged = FrameEntry(
-        run[0].c_off,
-        sum(e.c_size for e in run),
-        run[0].d_off,
-        sum(e.d_size for e in run),
-    )
-    # view: the run as one unit, followed by the REAL frames after it
-    # (only their d_sizes + the tail stream are consulted)
-    tmp = [merged] + list(entries[stop:])
-    return unit_lines(
-        tmp,
-        0,
-        lambda _e: b"".join(_decode_frame(path, e) for e in run if e.d_size),
-        lambda j: _FrameTailStream(path, entries[stop + (j - 1)].c_off),
-    )
-
-
-DEFAULT_BATCH_BYTES = 4 << 20
-
-
-def batch_picked_frames(
-    picked: list[tuple[str, int]], batch_bytes: int = DEFAULT_BATCH_BYTES
-) -> list[tuple[str, list[int]]]:
-    """Pack picked (file, frame_idx) units into per-task batches of
-    ~``batch_bytes`` compressed bytes, never crossing a file boundary
-    (a task holds one open file) — ``bgzf_text.batch_picked_blocks``
-    carried to the frame rung (round 13: the ×16000 grid showed the
-    one-task-per-frame layout pays a worker round-trip + boundary
-    fetch per 4 MB frame, which is what the run knob was compensating
-    for; at 100 TB and r=0.1 it would be ~2.5M tasks). The pick stays
-    per-FRAME — batching changes scheduling, not sampling semantics;
-    tests pin that the batched read equals the per-frame ownership
-    oracle exactly."""
-    if batch_bytes < 1:
-        raise ValueError(f"batch_bytes must be >= 1, got {batch_bytes}")
-    out: list[tuple[str, list[int]]] = []
-    cur_file: str | None = None
-    cur_idxs: list[int] = []
-    cur_bytes = 0
-    for f, i in picked:
-        sz = parse_seek_table(f)[i].c_size
-        if cur_file is not None and (f != cur_file or cur_bytes >= batch_bytes):
-            out.append((cur_file, cur_idxs))
-            cur_idxs, cur_bytes = [], 0
-        cur_file = f
-        cur_idxs.append(i)
-        cur_bytes += sz
-    if cur_file is not None:
-        out.append((cur_file, cur_idxs))
-    return out
-
-
-class _FrameBatchPartition(InputPartition):
-    def __init__(self, path: str, idxs: list[int]):
-        self.path = path
-        self.idxs = idxs
-
-
-class ZstdSeekableTextDataSource(DataSource):
+class ZstdSeekableTextDataSource(UnitTextSource):
     """format name ``zstd_seekable_text``; options: path, ratio, seed,
     batch_bytes, run_frames. Schema fixed: ``value string`` (one row
     per line), matching ``spark.read.text``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "zstd_seekable_text"
-
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> "ZstdSeekableTextReader":
-        return ZstdSeekableTextReader(self.options)
-
-
-class ZstdSeekableTextReader(DataSourceReader):
-    _BATCH_ROWS = 8192
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("zstd_seekable_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.seed = int(options.get("seed", "42"))
-        self.batch_bytes = int(options.get("batch_bytes", str(DEFAULT_BATCH_BYTES)))
-        self.run_frames = int(options.get("run_frames", "1"))
-
-    def partitions(self):
-        picked, _, _ = pick_frames(
-            self.path, self.ratio, self.seed, run_frames=self.run_frames
-        )
-        return [
-            _FrameBatchPartition(f, idxs)
-            for f, idxs in batch_picked_frames(picked, self.batch_bytes)
-        ]
-
-    def read(self, partition: _FrameBatchPartition):
-        import pyarrow as pa
-
-        entries = parse_seek_table(partition.path)
-        # contiguous picked frames decode once as a run (a per-frame
-        # loop would re-decode into every interior successor for its
-        # boundary line — the BGZF reader's merge, same reason)
-        runs: list[list[int]] = []
-        for idx in partition.idxs:
-            if runs and idx == runs[-1][1]:
-                runs[-1][1] = idx + 1
-            else:
-                runs.append([idx, idx + 1])
-        buf: list[str] = []
-        for start, stop in runs:
-            buf.extend(read_frame_run_lines(partition.path, entries, start, stop))
-            while len(buf) >= self._BATCH_ROWS:
-                chunk, buf = buf[: self._BATCH_ROWS], buf[self._BATCH_ROWS :]
-                yield pa.record_batch(
-                    [pa.array(chunk, pa.string())], names=["value"]
-                )
-        if buf:
-            yield pa.record_batch([pa.array(buf, pa.string())], names=["value"])
-
-
-def register_zstd_seekable_text(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(ZstdSeekableTextDataSource)
+    codec = CODEC
 
 
 def read_text_zstd_sampled(
@@ -682,24 +452,15 @@ def read_text_zstd_sampled(
     ``row_config`` composes a within-frame Bernoulli row stage — the
     same two-stage algebra as the byteblock / bzip2 / file samplers.
     ``batch_bytes`` packs picked frames into per-task batches
-    (scheduling only — sampling semantics are per-cluster; round 13,
-    the BGZF task-batching carried over). ``run_frames`` widens the
-    cluster to a contiguous run of that many frames, trading
-    pick-floor granularity for sequential I/O locality (see
-    ``pick_frames``; ``suggest_run_frames`` gives this rung's measured
+    (scheduling only — sampling semantics are per-cluster).
+    ``run_frames`` widens the cluster to a contiguous run of that many
+    frames, trading pick-floor granularity for sequential I/O locality
+    (see ``pick_frames``; ``suggest_run_frames`` gives the measured
     crossover)."""
-    register_zstd_seekable_text(spark)
-    # eager driver-side validation
+    # eager driver-side validation, through the module attribute so a
+    # wrapper installed on ``pick_frames`` sees the driver pick
     pick_frames(path, frame_ratio, seed, run_frames=run_frames)
-    df = (
-        spark.read.format("zstd_seekable_text")
-        .option("path", path)
-        .option("ratio", str(frame_ratio))
-        .option("seed", str(seed))
-        .option("batch_bytes", str(batch_bytes))
-        .option("run_frames", str(run_frames))
-        .load()
+    return load_sampled(
+        spark, ZstdSeekableTextDataSource, path, frame_ratio, seed, row_config,
+        batch_bytes=batch_bytes, run_frames=run_frames,
     )
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, frame_ratio, seed, row_config)

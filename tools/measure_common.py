@@ -43,11 +43,12 @@ def evict(paths: list[str]) -> None:
 
 
 def clear_block_cache() -> None:
-    """Reset the driver-side BGZF block-table cache: a timed pick must
-    re-pay the metadata scan or the cell measures a dict lookup."""
-    from random_sampling_based_approximate_mapreduce_spark.sources import bgzf_text
+    """Reset the driver-side unit-table cache (BGZF block hops and zstd
+    seek tables share it): a timed pick must re-pay the metadata scan or
+    tail read, or the cell measures a dict lookup."""
+    from random_sampling_based_approximate_mapreduce_spark.sources import unit_text
 
-    bgzf_text._BLOCK_CACHE.clear()
+    unit_text.TABLE_CACHE.clear()
 
 
 def timed_fresh_driver(fn, n: int, evict_paths: list[str] | None = None) -> float:
